@@ -225,8 +225,9 @@ def cmd_validate(args) -> int:
             f"given; validating the --table input instead",
             file=sys.stderr,
         )
-    # capture_plans: non-fused rule jobs carry their physical plan so the
-    # report's analysis section can flag cartesian joins / unpushed filters
+    # capture_plans: every outcome carries the physical plan it ran under
+    # so the report's analysis section can flag cartesian joins /
+    # unpushed filters
     report = ValidationEngine(spark, capture_plans=True).run(
         ruleset, tables,
         default_table=ruleset.table if ruleset.table in tables else "table",

@@ -12,6 +12,8 @@ from sparkcheck.compile.compiler import (
     summary_df,
     violation_rows,
     plan_time_check,
+    rule_column,
+    table_checks,
 )
 
 __all__ = [
@@ -23,6 +25,8 @@ __all__ = [
     "summary_df",
     "violation_rows",
     "plan_time_check",
+    "rule_column",
+    "table_checks",
     "GROUP_VERDICT_SCHEMA",
     "batch_custom_check",
     "grouped_custom_check",

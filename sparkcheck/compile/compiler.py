@@ -13,6 +13,9 @@ and ALL rules on a table fuse into ONE whole-stage-codegen'd
 ``df.agg(...)`` pass (conditional sums), so a 40-rule suite over 10^12
 rows costs a single scan + partial/final aggregation — no shuffle at all
 for the summary (aggregation without grouping keys is a tree-reduce).
+``table_checks`` adds a table's uniqueness (count_distinct) and
+referential (left join to distinct parent keys) rules to that same
+aggregate, so every check on a table is one scan.
 
 Violation rows come from a second (optional) pass that keeps lineage
 columns (spark partition id, rule ids, offending key) — at scale that
@@ -30,11 +33,12 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Mapping, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from sparkcheck.integrity.referential import parent_hint
 from sparkcheck.rules.models import (
     CompletenessRule,
     CustomRule,
@@ -44,8 +48,10 @@ from sparkcheck.rules.models import (
     LengthRule,
     NullCheckRule,
     RangeRule,
+    ReferentialIntegrityRule,
     RegexRule,
     Rule,
+    UniqueRule,
 )
 
 
@@ -173,19 +179,34 @@ def compile_rules(rules: Sequence[Rule]) -> list[CompiledPredicate]:
     return out
 
 
-def plan_time_check(df: DataFrame, rules: Sequence[Rule]) -> tuple[list[Rule], list[Rule]]:
+def plan_time_check(
+    df: DataFrame,
+    rules: Sequence[Rule],
+    tables: Mapping[str, DataFrame] | None = None,
+) -> tuple[list[Rule], list[Rule]]:
     """Split rules into (compilable, missing-column) at plan time.
 
     Mirrors the reference's missing-column guard
     (field_validator/__init__.py:300-316): a rule against an absent
     column becomes a synthetic 'column_exists' failure, never a crash.
+    A ``UniqueRule`` needs every key column in ``df``; a
+    ``ReferentialIntegrityRule`` (``df`` is its child) needs its child
+    column in ``df`` and its parent column in ``tables[parent_table]``.
     """
     cols = set(df.columns)
     ok: list[Rule] = []
     missing: list[Rule] = []
     for r in rules:
         need: tuple[str, ...]
-        if isinstance(r, CompletenessRule):
+        if isinstance(r, ReferentialIntegrityRule):
+            need = (r.child_column,)
+            parent = (tables or {}).get(r.parent_table)
+            if parent is not None and r.parent_column not in parent.columns:
+                missing.append(r)
+                continue
+        elif isinstance(r, UniqueRule):
+            need = r.key_columns
+        elif isinstance(r, CompletenessRule):
             need = r.required_columns
         elif isinstance(r, FieldRule):
             need = (r.column,)
@@ -195,48 +216,123 @@ def plan_time_check(df: DataFrame, rules: Sequence[Rule]) -> tuple[list[Rule], l
     return ok, missing
 
 
+def _count_exprs(cp: CompiledPredicate, i: int) -> list[Column]:
+    """(ev_i, vi_i): evaluated / violating row counts of one compiled
+    rule (count_if is 0, not NULL, over an empty table)."""
+    return [
+        F.count_if(cp.applicable).alias(f"ev_{i}"),
+        F.count_if(cp.violated).alias(f"vi_{i}"),
+    ]
+
+
+def _q(s: str) -> str:
+    """A rule/column name as a SQL string literal (for stack())."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def rule_column(rule: Rule) -> str:
+    """The column label a rule reports under: its column, its key or
+    required columns comma-joined, or an RI rule's child column."""
+    if isinstance(rule, ReferentialIntegrityRule):
+        return rule.child_column
+    if isinstance(rule, UniqueRule):
+        return ",".join(rule.key_columns)
+    return getattr(rule, "column", None) or ",".join(
+        getattr(rule, "required_columns", ())
+    )
+
+
 def fused_agg(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     """ONE aggregation pass for every rule: returns a single-row frame
     with total_rows plus (ev_i, vi_i) = evaluated/violation counts per
     rule, in rule order. This is the replacement for the reference's
     rule batching (engine.py:815-862) — composition happens before the
     plan, Catalyst fuses it into one scan."""
-    compiled = compile_rules(rules)
     exprs: list[Column] = [F.count(F.lit(1)).alias("total_rows")]
-    for i, cp in enumerate(compiled):
-        # coalesce: sum over zero rows is NULL; an empty table has 0
-        # evaluated rows / 0 violations, not unknown.
-        exprs.append(
-            F.coalesce(F.sum(cp.applicable.cast("long")), F.lit(0)).alias(f"ev_{i}")
-        )
-        exprs.append(
-            F.coalesce(F.sum(cp.violated.cast("long")), F.lit(0)).alias(f"vi_{i}")
-        )
+    for i, cp in enumerate(compile_rules(rules)):
+        exprs.extend(_count_exprs(cp, i))
     return df.agg(*exprs)
+
+
+def table_checks(
+    df: DataFrame,
+    rules: Sequence[Rule],
+    tables: Mapping[str, DataFrame] | None = None,
+) -> DataFrame:
+    """Every check on ONE table as one aggregate over one scan of it:
+    one row per rule, (rule_id, column, evaluated, violations,
+    total_rows, distinct_keys), in rule order.
+
+    - row rules (field / completeness): the ``fused_agg`` conditional
+      sums; ``distinct_keys`` is NULL.
+    - ``UniqueRule``: evaluated = rows whose key columns are all
+      non-NULL, distinct_keys = distinct such keys, violations =
+      evaluated − distinct_keys (``uniqueness_summary`` semantics).
+    - ``ReferentialIntegrityRule`` (``df`` is the child; the parent is
+      ``tables[parent_table]``): each child row gets a hit marker,
+      EXISTS(parent row with pk = fk), which Catalyst plans as an
+      existence join; evaluated = non-NULL FK rows,
+      violations = rows with a non-NULL FK and no hit, distinct_keys =
+      distinct orphan FKs (``orphan_summary`` semantics).
+      ``broadcast_parent`` picks the join as in ``orphan_rows``.
+
+    An existence join emits each child row once whatever the parent's
+    duplicates, so total_rows stays count(*) of ``df`` and the parent
+    keys need no distinct (no shuffle of the parent before a
+    broadcast). Each count_distinct is a shuffle on its key; with
+    exactly one, the row-rule partial sums ride through that shuffle,
+    with several Spark expands the rows once per distinct aggregate."""
+    rules = list(rules)
+    if not rules:
+        raise ValueError("table_checks needs at least one rule")
+    frame = df
+    exprs: list[Column] = [F.expr("count(1) AS total_rows")]
+    entries: list[str] = []
+    for i, r in enumerate(rules):
+        ev, vi, nd = f"ev_{i}", f"vi_{i}", f"nd_{i}"
+        if isinstance(r, UniqueRule):
+            keys = [F.col(c) for c in r.key_columns]
+            all_set = keys[0].isNotNull()
+            for k in keys[1:]:
+                all_set = all_set & k.isNotNull()
+            # count(DISTINCT a, b) skips tuples with any NULL member
+            exprs += [F.count_if(all_set).alias(ev),
+                      F.count_distinct(*keys).alias(nd)]
+            vi = f"{ev} - {nd}"
+        elif isinstance(r, ReferentialIntegrityRule):
+            if tables is None or r.parent_table not in tables:
+                raise KeyError(f"rule {r.name!r}: parent table "
+                               f"{r.parent_table!r} not in tables")
+            fk, pk, hit = f"__sc_fk_{i}", f"__sc_pk_{i}", f"__sc_hit_{i}"
+            keys = parent_hint(tables[r.parent_table].select(
+                F.col(r.parent_column).alias(pk)), r.broadcast_parent)
+            # the outer reference needs a name the parent cannot resolve:
+            # Catalyst would bind a bare child column name that the parent
+            # also has to the parent's own column, making EXISTS always true
+            frame = frame.withColumn(fk, F.col(r.child_column))
+            frame = frame.withColumn(
+                hit, keys.where(F.col(fk).outer() == F.col(pk)).exists())
+            # SQL text over the generated names: one driver round trip
+            # per aggregate instead of one per Column operator
+            orphan = f"{fk} IS NOT NULL AND NOT {hit}"
+            exprs += [F.expr(f"count({fk}) AS {ev}"),
+                      F.expr(f"count_if({orphan}) AS {vi}"),
+                      F.expr(f"count(DISTINCT CASE WHEN {orphan} THEN {fk} END) AS {nd}")]
+        else:
+            exprs.extend(_count_exprs(compile_rules([r])[0], i))
+            nd = "CAST(NULL AS BIGINT)"
+        entries.append(
+            f"{_q(r.name)}, {_q(rule_column(r))}, {ev}, {vi}, total_rows, {nd}")
+    return frame.agg(*exprs).selectExpr(
+        f"stack({len(rules)}, {', '.join(entries)}) as "
+        "(rule_id, column, evaluated, violations, total_rows, distinct_keys)")
 
 
 def summary_df(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     """Distributed per-rule summary: (rule_id, column, evaluated,
-    violations, total_rows, violation_rate). Built by unpivoting the
-    single fused_agg row with ``stack`` — still one scan, no collect."""
-    rules = list(rules)
-    agg = fused_agg(df, rules)
-    n = len(rules)
-    def _q(s: str) -> str:
-        # rule/column names are interpolated into the stack() SQL literal
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    pairs = []
-    for i, r in enumerate(rules):
-        colname = getattr(r, "column", None) or ",".join(
-            getattr(r, "required_columns", ())
-        )
-        pairs.append(f"{_q(r.name)}, {_q(colname)}, ev_{i}, vi_{i}")
-    stacked = agg.selectExpr(
-        "total_rows",
-        f"stack({n}, {', '.join(pairs)}) as (rule_id, column, evaluated, violations)",
-    )
-    return stacked.select(
+    violations, total_rows, violation_rate): ``table_checks`` plus the
+    rate — still one scan, no collect."""
+    return table_checks(df, rules).select(
         "rule_id",
         "column",
         "evaluated",
@@ -262,16 +358,11 @@ def partition_verdicts(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
     compiled = compile_rules(rules)
     aggs: list[Column] = []
     for i, cp in enumerate(compiled):
-        aggs.append(F.coalesce(F.sum(cp.applicable.cast("long")), F.lit(0)).alias(f"ev_{i}"))
-        aggs.append(F.coalesce(F.sum(cp.violated.cast("long")), F.lit(0)).alias(f"vi_{i}"))
+        aggs.extend(_count_exprs(cp, i))
     wide = (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(*aggs)
     )
-
-    def _q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
     pairs = ", ".join(
         f"{_q(cp.rule.name)}, ev_{i}, vi_{i}" for i, cp in enumerate(compiled)
     )

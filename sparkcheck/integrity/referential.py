@@ -20,6 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
+def parent_hint(parent: DataFrame, broadcast_parent: bool | None) -> DataFrame:
+    """Apply ``broadcast_parent`` to the parent side of an orphan join:
+    True hints a broadcast, False a shuffled hash join (never a
+    broadcast), None leaves the choice to Catalyst/AQE size estimates."""
+    if broadcast_parent is True:
+        return F.broadcast(parent)
+    if broadcast_parent is False:
+        return parent.hint("shuffle_hash")
+    return parent
+
+
 def orphan_rows(
     child: DataFrame,
     fk: str,
@@ -35,9 +46,7 @@ def orphan_rows(
     fits in executor memory, e.g. any dimension table); False forces the
     shuffle path; None lets Catalyst/AQE decide from size estimates.
     """
-    keys = parent.select(F.col(pk).alias(fk)).distinct()
-    if broadcast_parent is True:
-        keys = F.broadcast(keys)
+    keys = parent_hint(parent.select(F.col(pk).alias(fk)).distinct(), broadcast_parent)
     sel = list(dict.fromkeys([fk, *extra_cols]))
     return (
         child.select(*sel, F.spark_partition_id().alias("partition_id"))

@@ -104,11 +104,12 @@ def render_validation_html(report: Any, title: str = "sparkcheck report") -> str
     # captured physical plans (engine capture_plans=True) as collapsed
     # blocks — the reporting face of the reference's query analysis
     # (query_analyzer.py attaches plans/suggestions to slow queries)
+    from sparkcheck.run.analyze import plan_groups
+
     plan_blocks = [
-        f"<details><summary>{html.escape(o.rule_id)}</summary>"
-        f"<pre class='plan'>{html.escape(getattr(o, 'plan', '') or '')}</pre></details>"
-        for o in report.outcomes
-        if getattr(o, "plan", "")
+        f"<details><summary>{html.escape(', '.join(rule_ids))}</summary>"
+        f"<pre class='plan'>{html.escape(plan)}</pre></details>"
+        for plan, rule_ids in plan_groups(report.outcomes).items()
     ]
     plans_html = (
         f"<h2>Captured physical plans</h2>{''.join(plan_blocks)}"

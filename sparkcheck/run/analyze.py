@@ -340,12 +340,25 @@ def analyze_report(
     report: Any, history: Iterable[Mapping[str, Any]] = ()
 ) -> list[Insight]:
     """All insights for one run: slow/flaky/degrading-rule detectors,
-    same-cause failure grouping, and plan smells over every outcome that
-    carries a captured plan (engine ``capture_plans=True``)."""
+    same-cause failure grouping, and plan smells over every captured
+    plan (engine ``capture_plans=True``). Rules compiled into one fused
+    action share its plan, so each distinct plan is scanned once and its
+    smells name every rule that ran under it."""
     insights = slow_rules(report, history)
     insights.extend(flaky_rules(history))
     insights.extend(degrading_rules(history))
     insights.extend(failure_patterns(report))
-    for o in _outcomes(report):
-        insights.extend(plan_smells(getattr(o, "plan", "") or "", o.rule_id))
+    for plan, rule_ids in plan_groups(_outcomes(report)).items():
+        insights.extend(plan_smells(plan, ",".join(rule_ids)))
     return insights
+
+
+def plan_groups(outcomes: Iterable[Any]) -> dict[str, list[str]]:
+    """Captured plan text → ids of the rules that ran under it, in
+    outcome order (outcomes without a plan are left out)."""
+    groups: dict[str, list[str]] = {}
+    for o in outcomes:
+        plan = getattr(o, "plan", "") or ""
+        if plan:
+            groups.setdefault(plan, []).append(o.rule_id)
+    return groups

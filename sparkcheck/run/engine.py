@@ -3,17 +3,20 @@
 Execution shape (vs the reference's per-rule thread pool,
 business_rules/engine.py:615-697):
 
-1. plan-time checks (missing columns → synthetic failures, mirrors
-   field_validator/__init__.py:300-316)
-2. topo-sort rules (scheduler), apply severity gating / fail_fast
-3. FUSE all row-predicate rules per table into ONE agg pass
-   (sparkcheck.compile.fused_agg) — the reference's "rule batching"
-   upgraded to a single scan
-4. uniqueness / referential rules run as their dedicated join jobs —
-   submitted CONCURRENTLY per dependency wave (futures + a FAIR
-   scheduler pool, ruleset.max_concurrent driver threads), so
-   independent small join jobs overlap their scans instead of running
-   one .collect() at a time; outcomes stay in topo order
+1. plan-time checks (missing tables / columns → synthetic failures,
+   mirrors field_validator/__init__.py:300-316)
+2. topo-sort rules (scheduler); a ``fail_fast`` set is cut into gated
+   stages — the row pass, then each dependency wave — and stops after
+   the first stage with a failing error-severity rule; any other set is
+   a single stage
+3. COMPILE every row, uniqueness and referential rule of a stage into
+   one aggregate per target table (sparkcheck.compile.table_checks:
+   fused conditional sums, count_distinct per unique key, orphan
+   left-join hit markers) and run all of a stage's tables — across every
+   rule set of the run (``run_many``) — as ONE ``collect()``
+4. SqlRule keeps its own job: a stage's SQL rules run after the fused
+   action, per dependency wave, from ruleset.max_concurrent driver
+   threads in a FAIR pool; outcomes stay in topo / wave order
 5. SqlRule runs via spark.sql with the reference's violation-row
    contract (business_rules/engine.py:516-574): each returned row is one
    violation; recognized columns violation_count / message / table_name /
@@ -21,7 +24,8 @@ business_rules/engine.py:615-697):
    violation_count<=0 and no samples count as passing
 6. thresholds (engine.py:429-452): a rule passes when violations ==
    expected_violations (if set) or violations <= max_violations
-7. per-rule wall time + rows/s metrics in every outcome
+7. per-rule wall time + rows/s metrics in every outcome (fused rules
+   share their action's wall time evenly)
 """
 
 from __future__ import annotations
@@ -29,16 +33,18 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkcheck.compile import plan_time_check, summary_df, violation_rows
-from sparkcheck.integrity import (
-    duplicate_violation_rows,
-    orphan_summary,
-    uniqueness_summary,
+from sparkcheck.compile import (
+    plan_time_check,
+    rule_column,
+    table_checks,
+    violation_rows,
 )
+from sparkcheck.integrity import duplicate_violation_rows
 from sparkcheck.rules.models import (
     CompletenessRule,
     FieldRule,
@@ -66,7 +72,8 @@ class RuleOutcome:
     message: str = ""
     sample_values: list[Any] = field(default_factory=list)
     elapsed_sec: float = 0.0
-    # formatted physical plan, captured for non-fused rule jobs when the
+    # formatted physical plan of the action the rule ran in (its fused
+    # per-table aggregate, or its own SqlRule job), captured when the
     # engine runs with capture_plans=True (input to run.analyze smells)
     plan: str = ""
 
@@ -105,10 +112,11 @@ class ValidationReport:
 
 
 def split_rules(rules) -> tuple[list[Rule], list[Rule]]:
-    """Partition rules by execution strategy: (row_rules, other_rules).
-    Row rules fuse into one agg pass; others (unique / RI / SQL) run as
-    dedicated join/SQL jobs. Shared by the engine and the checkpointed
-    runner so both classify identically."""
+    """Partition rules into (row_rules, other_rules): row rules are
+    per-row predicates (the fail_fast row pass, the checkpointed
+    runner's per-group pass); others are unique / RI / SQL rules. Shared
+    by the engine and the checkpointed runner so both classify
+    identically."""
     row_rules: list[Rule] = []
     other_rules: list[Rule] = []
     for r in rules:
@@ -145,14 +153,82 @@ def _threshold_pass(rule: Rule, violations: int) -> bool:
     return violations <= rule.max_violations
 
 
+def _failing(o: RuleOutcome) -> bool:
+    return not o.passed and o.severity == Severity.ERROR.value
+
+
+def _synthetic(r: Rule, table: str, message: str, skipped: bool = False) -> RuleOutcome:
+    return RuleOutcome(
+        rule_id=r.name, table=table, column=rule_column(r),
+        passed=False, violations=0, evaluated=0, total_rows=0,
+        severity=r.severity.value, skipped=skipped, message=message,
+    )
+
+
+def _fused_outcome(r: Rule, row: Any, table: str) -> RuleOutcome:
+    """One table_checks row as an outcome. Unique rules report their
+    non-NULL key count as evaluated/total_rows; referential rules report
+    their orphan count in all three counts plus the distinct orphan keys."""
+    viol = row["violations"]
+    evaluated, total, message = row["evaluated"], row["total_rows"], ""
+    if isinstance(r, UniqueRule):
+        total = evaluated
+    elif isinstance(r, ReferentialIntegrityRule):
+        table, evaluated, total = r.child_table, viol, viol
+        message = f"distinct orphan keys: {row['distinct_keys']}"
+    return RuleOutcome(
+        rule_id=r.name, table=table, column=row["column"],
+        passed=_threshold_pass(r, viol), violations=viol,
+        evaluated=evaluated, total_rows=total,
+        severity=r.severity.value, message=message,
+    )
+
+
+@dataclass
+class _SetRun:
+    """One rule set's progress through a run: its gated stages and the
+    outcomes collected so far (keyed by rule name)."""
+
+    ruleset: RuleSet
+    table: str
+    order: list[str]
+    stages: list[list[Rule]]
+    outcomes: dict[str, RuleOutcome] = field(default_factory=dict)
+    elapsed: float = 0.0
+    run_ts: float = field(default_factory=time.time)
+
+    @classmethod
+    def plan(cls, ruleset: RuleSet, table: str) -> "_SetRun":
+        row_rules, other_rules = split_rules(topo_sort(ruleset.enabled_rules()))
+        waves = _dependency_waves(other_rules)
+        order = [r.name for r in row_rules] + [r.name for w in waves for r in w]
+        if ruleset.fail_fast:
+            stages = [s for s in (row_rules, *waves) if s]
+        else:
+            stages = [row_rules + other_rules] if order else []
+        return cls(ruleset, table, order, stages)
+
+    @property
+    def stopped(self) -> bool:
+        return self.ruleset.fail_fast and any(map(_failing, self.outcomes.values()))
+
+    def report(self) -> ValidationReport:
+        return ValidationReport(
+            ruleset=self.ruleset.name,
+            outcomes=[self.outcomes[n] for n in self.order if n in self.outcomes],
+            elapsed_sec=self.elapsed, run_ts=self.run_ts,
+        )
+
+
 class ValidationEngine:
     """Runs rule sets over named tables (a dict of DataFrames)."""
 
     def __init__(self, spark: SparkSession, capture_plans: bool = False):
         self.spark = spark
-        # attach explain(mode="formatted") to each non-fused rule's
-        # outcome (uniqueness/RI joins, SqlRule) for run.analyze smells;
-        # plan-text capture is driver-side and costs no Spark job
+        # attach explain(mode="formatted") to each compiled outcome (the
+        # fused per-table plan, shared by its rules) and SqlRule outcome,
+        # for run.analyze smells; plan-text capture is driver-side and
+        # costs no Spark job
         self.capture_plans = capture_plans
 
     def _plan(self, frame: DataFrame) -> str:
@@ -168,155 +244,134 @@ class ValidationEngine:
         tables: Mapping[str, DataFrame],
         default_table: str | None = None,
     ) -> ValidationReport:
-        t0 = time.monotonic()
-        report = ValidationReport(ruleset=ruleset.name, run_ts=time.time())
-        ordered = topo_sort(ruleset.enabled_rules())
+        return self.run_many([(ruleset, default_table or next(iter(tables)))], tables)[0]
 
-        # Partition rules by execution strategy, preserving order info.
-        row_rules, other_rules = split_rules(ordered)
-
-        table_name = default_table or next(iter(tables))
-        df = tables[table_name]
-
-        # ---- fused row-predicate pass (one scan for ALL such rules) ----
-        if row_rules:
-            ok, missing = plan_time_check(df, row_rules)
-            for r in missing:
-                report.outcomes.append(
-                    RuleOutcome(
-                        rule_id=r.name, table=table_name,
-                        column=getattr(r, "column", ""),
-                        passed=False, violations=0, evaluated=0, total_rows=0,
-                        severity=r.severity.value,
-                        message="column_exists check failed: missing column",
-                    )
-                )
-            if ok:
-                t1 = time.monotonic()
-                rows = summary_df(df, ok).collect()
-                dt = time.monotonic() - t1
-                by_id = {r.name: r for r in ok}
-                for row in rows:
-                    rule = by_id[row["rule_id"]]
-                    report.outcomes.append(
-                        RuleOutcome(
-                            rule_id=row["rule_id"], table=table_name,
-                            column=row["column"],
-                            passed=_threshold_pass(rule, row["violations"]),
-                            violations=row["violations"],
-                            evaluated=row["evaluated"],
-                            total_rows=row["total_rows"],
-                            severity=rule.severity.value,
-                            elapsed_sec=dt / max(len(rows), 1),
-                        )
-                    )
-
-        # fail_fast: stop before join/sql jobs if an ERROR rule failed
-        if ruleset.fail_fast and not report.passed:
-            report.elapsed_sec = time.monotonic() - t0
-            return report
-
-        # ---- dedicated jobs, concurrent per dependency wave ----
-        # Rules with all deps satisfied run together: each wave's jobs
-        # are submitted from ruleset.max_concurrent driver threads into a
-        # FAIR pool (the reference ran rules in a thread pool,
-        # business_rules/engine.py:615-697 — here concurrency overlaps
-        # SPARK JOB scans, which is where the time goes on a cluster).
-        sc = self.spark.sparkContext
-        for wave in _dependency_waves(other_rules):
-            def _one(r: Rule) -> RuleOutcome:
-                sc.setLocalProperty("spark.scheduler.pool", "sparkcheck-rules")
-                try:
-                    return self._run_other_rule(r, tables, table_name, df)
-                finally:
-                    sc.setLocalProperty("spark.scheduler.pool", None)
-
-            if len(wave) == 1 or ruleset.max_concurrent <= 1:
-                # sequential path keeps the strict fail_fast contract:
-                # stop IMMEDIATELY after a failing error-severity rule
-                # (never start the next scan)
-                stop = False
-                for r in wave:
-                    o = _one(r)
-                    report.outcomes.append(o)
-                    if (ruleset.fail_fast and not o.passed
-                            and o.severity == Severity.ERROR.value):
-                        stop = True
-                        break
-                if stop:
-                    break
-            else:
-                # parallel wave: jobs are in flight together, so fail_fast
-                # gates BETWEEN waves (documented semantics)
-                with ThreadPoolExecutor(max_workers=ruleset.max_concurrent) as pool:
-                    outs = list(pool.map(_one, wave))
-                report.outcomes.extend(outs)  # topo/wave order
-                if ruleset.fail_fast and any(
-                    not o.passed and o.severity == Severity.ERROR.value for o in outs
-                ):
-                    break
-
-        report.elapsed_sec = time.monotonic() - t0
-        return report
-
-    def _run_other_rule(
+    def run_many(
         self,
-        r: Rule,
+        bindings: Sequence[tuple[RuleSet, str]],
         tables: Mapping[str, DataFrame],
-        table_name: str,
-        df: DataFrame,
-    ) -> RuleOutcome:
-        t1 = time.monotonic()
-        if isinstance(r, UniqueRule):
-            tbl = tables.get(getattr(r, "table", ""), df)
-            frame = uniqueness_summary(tbl, list(r.key_columns), approx=False)
-            s = frame.collect()[0]
-            viol = s["duplicate_excess"]
-            return RuleOutcome(
-                rule_id=r.name, table=table_name, column=",".join(r.key_columns),
-                passed=_threshold_pass(r, viol), violations=viol,
-                evaluated=s["total_keys"], total_rows=s["total_keys"],
-                severity=r.severity.value, elapsed_sec=time.monotonic() - t1,
-                plan=self._plan(frame),
-            )
-        if isinstance(r, ReferentialIntegrityRule):
-            # missing table ⇒ synthetic failure, never a crash
-            # (the table-level analog of the missing-column guard)
-            absent = [t for t in (r.child_table, r.parent_table) if t not in tables]
-            if absent:
-                return RuleOutcome(
-                    rule_id=r.name, table=r.child_table, column=r.child_column,
-                    passed=False, violations=0, evaluated=0, total_rows=0,
-                    severity=r.severity.value, skipped=True,
-                    message=f"table_exists check failed: {absent} not provided",
-                )
-            child = tables[r.child_table]
-            parent = tables[r.parent_table]
-            frame = orphan_summary(
-                child, r.child_column, parent, r.parent_column,
-                broadcast_parent=r.broadcast_parent,
-            )
-            s = frame.collect()[0]
-            viol = s["orphan_count"]
-            return RuleOutcome(
-                rule_id=r.name, table=r.child_table,
-                column=r.child_column,
-                passed=_threshold_pass(r, viol), violations=viol,
-                evaluated=viol, total_rows=viol,
-                severity=r.severity.value, elapsed_sec=time.monotonic() - t1,
-                message=f"distinct orphan keys: {s['distinct_orphan_keys']}",
-                plan=self._plan(frame),
-            )
-        if isinstance(r, SqlRule):
-            out = self._run_sql_rule(r, table_name)
-            out.elapsed_sec = time.monotonic() - t1
+    ) -> list[ValidationReport]:
+        """Run several (rule set, bound table name) pairs as one
+        validation run: stage k of every set still running executes as
+        ONE fused action (plus its SqlRules). Sets without fail_fast have
+        a single stage, so such a run is one ``collect()``. Reports come
+        back in binding order."""
+        runs = [_SetRun.plan(rs, table) for rs, table in bindings]
+        k = 0
+        while True:
+            live = [r for r in runs if k < len(r.stages) and not r.stopped]
+            if not live:
+                break
+            t0 = time.monotonic()
+            self._run_stage([(r, r.stages[k]) for r in live], tables)
+            dt = time.monotonic() - t0
+            for r in live:
+                r.elapsed += dt
+            k += 1
+        return [r.report() for r in runs]
+
+    def _run_stage(
+        self,
+        items: Sequence[tuple[_SetRun, list[Rule]]],
+        tables: Mapping[str, DataFrame],
+    ) -> None:
+        groups: list[tuple[_SetRun, str, list[Rule]]] = []
+        sql: list[tuple[_SetRun, list[Rule]]] = []
+        for run, rules in items:
+            by_table: dict[str, list[Rule]] = {}
+            sql_rules: list[Rule] = []
+            for r in rules:
+                if isinstance(r, SqlRule):
+                    sql_rules.append(r)
+                elif isinstance(r, ReferentialIntegrityRule):
+                    # missing table ⇒ synthetic failure, never a crash
+                    # (the table-level analog of the missing-column guard)
+                    absent = [t for t in (r.child_table, r.parent_table) if t not in tables]
+                    if absent:
+                        run.outcomes[r.name] = _synthetic(
+                            r, r.child_table,
+                            f"table_exists check failed: {absent} not provided",
+                            skipped=True)
+                    else:
+                        by_table.setdefault(r.child_table, []).append(r)
+                elif isinstance(r, (FieldRule, CompletenessRule)):
+                    by_table.setdefault(run.table, []).append(r)
+                else:
+                    run.outcomes[r.name] = _synthetic(
+                        r, run.table, f"unsupported rule type {type(r).__name__}",
+                        skipped=True)
+            for table, rs in by_table.items():
+                ok, missing = plan_time_check(tables[table], rs, tables)
+                for r in missing:
+                    run.outcomes[r.name] = _synthetic(
+                        r, table, "column_exists check failed: missing column")
+                if ok:
+                    groups.append((run, table, ok))
+            if sql_rules:
+                sql.append((run, sql_rules))
+
+        if groups:
+            self._collect_fused(groups, tables)
+        for run, rules in sql:
+            self._run_sql_waves(run, rules)
+
+    def _collect_fused(
+        self,
+        groups: Sequence[tuple[_SetRun, str, list[Rule]]],
+        tables: Mapping[str, DataFrame],
+    ) -> None:
+        """Compile each (set, table) group with table_checks, union the
+        frames and collect them in ONE action named after its suites;
+        fill in the outcomes."""
+        frames = [table_checks(tables[t], rules, tables) for _, t, rules in groups]
+        union = reduce(DataFrame.union, [
+            f.selectExpr(f"{g} AS grp", "*") for g, f in enumerate(frames)])
+        n_rules = sum(len(rules) for _, _, rules in groups)
+        suites = ", ".join(dict.fromkeys(run.ruleset.name for run, _, _ in groups))
+        n_tables = len({t for _, t, _ in groups})
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{suites}: {n_rules} rules over {n_tables} tables")
+        t0 = time.monotonic()
+        try:
+            rows = union.collect()
+        finally:
+            sc.setJobDescription(prev)  # type: ignore[arg-type]
+        dt = time.monotonic() - t0
+        got = {(row["grp"], row["rule_id"]): row for row in rows}
+        for g, (run, table, rules) in enumerate(groups):
+            plan = self._plan(frames[g])
+            for r in rules:
+                o = _fused_outcome(r, got[(g, r.name)], table)
+                o.elapsed_sec = dt / n_rules
+                o.plan = plan
+                run.outcomes[r.name] = o
+
+    def _run_sql_waves(self, run: _SetRun, rules: Sequence[Rule]) -> None:
+        """SqlRules keep one job each, submitted per dependency wave
+        from ruleset.max_concurrent driver threads into a FAIR pool, so
+        independent rule SQL overlaps its scans (the reference ran rules
+        in a thread pool, business_rules/engine.py:615-697)."""
+        sc = self.spark.sparkContext
+
+        def _one(r: Rule) -> RuleOutcome:
+            sc.setLocalProperty("spark.scheduler.pool", "sparkcheck-rules")
+            t0 = time.monotonic()
+            try:
+                out = self._run_sql_rule(r, run.table)
+            finally:
+                sc.setLocalProperty("spark.scheduler.pool", None)  # type: ignore[arg-type]
+            out.elapsed_sec = time.monotonic() - t0
             return out
-        return RuleOutcome(
-            rule_id=r.name, table=table_name, column="",
-            passed=False, violations=0, evaluated=0, total_rows=0,
-            severity=r.severity.value, skipped=True,
-            message=f"unsupported rule type {type(r).__name__}",
-        )
+
+        for wave in _dependency_waves(rules):
+            if len(wave) == 1 or run.ruleset.max_concurrent <= 1:
+                outs = [_one(r) for r in wave]
+            else:
+                with ThreadPoolExecutor(max_workers=run.ruleset.max_concurrent) as pool:
+                    outs = list(pool.map(_one, wave))
+            for r, o in zip(wave, outs):
+                run.outcomes[r.name] = o
 
     def _run_sql_rule(self, rule: SqlRule, table_name: str) -> RuleOutcome:
         """spark.sql + the reference's violation contract

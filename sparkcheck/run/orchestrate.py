@@ -4,19 +4,25 @@ with aggregate reporting.
 Reference surface: ``sql_testing/orchestration.py:1-888`` (workflow
 composition of suites) and ``enterprise_executor.py:1-964`` (multi-
 rule-set enterprise runs with merged results). The Spark analog is
-deliberately thin — each rule-set already compiles to a fused
-single-pass job (compile/compiler.py), so orchestration is just
-binding every set to its input table, sequencing (or thread-
-overlapping) the runs on one SparkSession, and merging verdicts.
+deliberately thin: bind every set to its input table, compile the run
+into as few Spark actions as its gating allows, merge verdicts.
 
-Parallelism note: ``parallel=N`` overlaps rule-set DRIVER threads; the
-actual work is Spark jobs, which the FAIR scheduler interleaves across
-the cluster (``get_spark`` sets ``spark.scheduler.mode=FAIR``; each
-worker thread here pins the ``sparkcheck-orchestrate`` pool so one
-suite's large scan cannot serialize the others behind it under FIFO).
-On a shared 1000-executor cluster this keeps executors busy while one
-suite's small final stages drain — it does NOT multiply cluster
-capacity, so N beyond 2–4 buys nothing.
+Without run-level ``fail_fast`` every set goes through ONE
+``ValidationEngine.run_many`` call: the row, uniqueness and referential
+rules of all sets compile to one aggregate per (set, table)
+(compile.table_checks), unioned into a single ``collect()`` whose rows
+split back into per-set reports in declaration order. A set with its
+own ``fail_fast`` is cut into gated stages (row pass, then each
+dependency wave) that run through the same compiler.
+
+Parallelism note: ``parallel=N`` only overlaps ``fail_fast`` stages and
+SqlRules. Under run-level ``fail_fast`` each set is one gated stage, and
+up to N of them run from driver threads pinned to the
+``sparkcheck-orchestrate`` FAIR pool (``get_spark`` sets
+``spark.scheduler.mode=FAIR``) so one suite's large scan cannot
+serialize the others behind it. SqlRules keep one job each on their
+set's wave thread pool (``RuleSet.max_concurrent``). A run without
+``fail_fast`` is one fused action, which ``parallel`` does not change.
 
 ``fail_fast=True`` stops launching new rule-sets once one has FAILED
 (error-severity violations); already-running ones finish — on the
@@ -106,10 +112,18 @@ def run_rulesets(
     result = OrchestrationResult()
     t0 = time.monotonic()
     engine = ValidationEngine(spark, capture_plans=capture_plans)
-    stop = threading.Event()  # set on first failure when fail_fast
+    if not fail_fast:
+        bindings = [(rs, rs.table or fallback) for rs in sets]
+        reps = engine.run_many(bindings, tables)
+        result.reports = {rs.name: rep for rs, rep in zip(sets, reps)}
+        result.elapsed_sec = time.monotonic() - t0
+        _append_history(result, history_path)
+        return result
+
+    stop = threading.Event()  # set on first failure
 
     def _run_one(rs: RuleSet) -> ValidationReport | None:
-        if fail_fast and stop.is_set():
+        if stop.is_set():
             return None  # queued behind a failure — skip
         # thread-local FAIR pool so overlapped suites' jobs interleave
         # instead of FIFO-serializing behind one suite's large scan
@@ -120,29 +134,27 @@ def run_rulesets(
             rep = engine.run(rs, tables, default_table=rs.table or fallback)
         finally:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-        if fail_fast and not rep.passed:
+        if not rep.passed:
             stop.set()
         return rep
 
     if parallel and parallel > 1 and len(sets) > 1:
-        # Under fail_fast, submit ROLLING: keep at most `parallel` in
-        # flight and top up as each future finishes. Submitting every set
-        # up front would start them all before the first failure can raise
-        # the stop flag (fail_fast degrades to a no-op whenever
-        # max_workers >= len(sets)); a wave BARRIER fixes that but lets
-        # one straggler per wave idle every other worker across otherwise-
-        # passing suites. Rolling keeps full overlap while a failure still
-        # halts submission within one in-flight window. Without fail_fast
-        # there is nothing to stop, so everything submits up front.
-        in_flight_cap = parallel if fail_fast else len(sets)
+        # Submit ROLLING: keep at most `parallel` in flight and top up as
+        # each future finishes. Submitting every set up front would start
+        # them all before the first failure can raise the stop flag
+        # (fail_fast degrades to a no-op whenever max_workers >=
+        # len(sets)); a wave BARRIER fixes that but lets one straggler per
+        # wave idle every other worker across otherwise-passing suites.
+        # Rolling keeps full overlap while a failure still halts
+        # submission within one in-flight window.
         with ThreadPoolExecutor(max_workers=parallel) as pool:
             pending = list(sets)
             in_flight: dict[Any, RuleSet] = {}
             while pending or in_flight:
-                if fail_fast and stop.is_set():
+                if stop.is_set():
                     result.skipped.extend(rs.name for rs in pending)
                     pending = []
-                while pending and len(in_flight) < in_flight_cap:
+                while pending and len(in_flight) < parallel:
                     rs = pending.pop(0)
                     in_flight[pool.submit(_run_one, rs)] = rs
                 if not in_flight:
@@ -170,10 +182,13 @@ def run_rulesets(
             else:
                 result.reports[rs.name] = rep
     result.elapsed_sec = time.monotonic() - t0
+    _append_history(result, history_path)
+    return result
 
+
+def _append_history(result: OrchestrationResult, history_path: str | None) -> None:
     if history_path:
         from sparkcheck.io.html_report import append_history
 
         for rep in result.reports.values():
             append_history(rep, history_path)
-    return result

@@ -9,8 +9,37 @@ session timezone so results compare bit-for-bit against external oracles.
 from __future__ import annotations
 
 import os
+from typing import Mapping
 
 from pyspark.sql import SparkSession
+
+
+def host_cpus() -> int:
+    """Cores this process may run on (its affinity mask), not the
+    machine's total."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def resource_defaults(
+    env: Mapping[str, str] | None = None,
+    cpus: int | None = None,
+    mem_bytes: int | None = None,
+) -> tuple[str, str]:
+    """(local-mode cores, driver heap) for ``get_spark``.
+
+    ``SPARK_GRAFT_CPUS`` / ``SPARKCHECK_DRIVER_MEM`` win when set;
+    otherwise the cores are the process's affinity mask and the heap is a
+    quarter of physical memory (MemTotal; at least 1 GiB), so a default
+    session never plans more threads or heap than the host has.
+    ``cpus`` / ``mem_bytes`` stand in for the host probes (tests)."""
+    env = os.environ if env is None else env
+    if mem_bytes is None:
+        mem_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    n = env.get("SPARK_GRAFT_CPUS") or str(cpus or host_cpus())
+    heap = env.get("SPARKCHECK_DRIVER_MEM") or f"{max(1024, mem_bytes >> 22)}m"
+    return n, heap
 
 
 def get_spark(
@@ -20,11 +49,11 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with validation-friendly defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, heap = resource_defaults()
     master = master or f"local[{cpus}]"
     # In local[N] the "cluster" is N threads; shuffle partitions ≈ cores.
     # On a real cluster this should be ~2-3× total executor cores.
-    nslots = int(cpus) if str(cpus).isdigit() else 32
+    nslots = int(cpus) if cpus.isdigit() else host_cpus()
     shuffle_partitions = shuffle_partitions or max(nslots, 8)
 
     b = (
@@ -39,7 +68,7 @@ def get_spark(
         # NULL-propagation of size()/split() etc. is version-independent.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARKCHECK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # FAIR scheduling so concurrently-submitted rule/test jobs share
         # executors instead of queueing behind one long scan (the engine
