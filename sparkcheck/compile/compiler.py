@@ -230,6 +230,11 @@ def _q(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier (dots stay in the name)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def rule_column(rule: Rule) -> str:
     """The column label a rule reports under: its column, its key or
     required columns comma-joined, or an RI rule's child column."""
@@ -258,10 +263,18 @@ def table_checks(
     df: DataFrame,
     rules: Sequence[Rule],
     tables: Mapping[str, DataFrame] | None = None,
+    by: str | None = None,
 ) -> DataFrame:
     """Every check on ONE table as one aggregate over one scan of it:
     one row per rule, (rule_id, column, evaluated, violations,
     total_rows, distinct_keys), in rule order.
+
+    ``by`` names a column of ``df`` to run the same aggregate under
+    ``groupBy(by)``: one row per (group, rule), rules in order within
+    each group, with ``by`` as the first output column. Every count is
+    then the count inside its group — what filtering ``df`` to that
+    group would give (a unique rule counts distinct keys per group).
+    NULL is a group of its own; groups with no rows produce no rows.
 
     - row rules (field / completeness): the ``fused_agg`` conditional
       sums; ``distinct_keys`` is NULL.
@@ -323,24 +336,23 @@ def table_checks(
             nd = "CAST(NULL AS BIGINT)"
         entries.append(
             f"{_q(r.name)}, {_q(rule_column(r))}, {ev}, {vi}, total_rows, {nd}")
-    return frame.agg(*exprs).selectExpr(
+    keep = [_ident(by)] if by is not None else []
+    return frame.groupBy(*keep).agg(*exprs).selectExpr(*keep,
         f"stack({len(rules)}, {', '.join(entries)}) as "
         "(rule_id, column, evaluated, violations, total_rows, distinct_keys)")
 
 
-def summary_df(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
+def summary_df(
+    df: DataFrame, rules: Sequence[Rule], by: str | None = None
+) -> DataFrame:
     """Distributed per-rule summary: (rule_id, column, evaluated,
     violations, total_rows, violation_rate): ``table_checks`` plus the
-    rate — still one scan, no collect."""
-    return table_checks(df, rules).select(
-        "rule_id",
-        "column",
-        "evaluated",
-        "violations",
-        "total_rows",
+    rate — still one scan, no collect. ``by`` groups it as in
+    ``table_checks`` (one row per group and rule, ``by`` first)."""
+    return table_checks(df, rules, by=by).drop("distinct_keys").withColumn(
+        "violation_rate",
         F.when(F.col("evaluated") > 0, F.col("violations") / F.col("evaluated"))
-        .otherwise(F.lit(0.0))
-        .alias("violation_rate"),
+        .otherwise(F.lit(0.0)),
     )
 
 

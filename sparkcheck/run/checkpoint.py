@@ -3,22 +3,36 @@
 North-rule requirement: interrupted runs resume per-partition without
 recomputation. The reference's nearest analog is its result cache keyed
 by (rule, context) (business_rules/engine.py:71-128) — volatile and
-in-process. Here the checkpoint is DURABLE: a parquet verdict table
-keyed by (suite_fingerprint, group_id), where ``group_id`` is the value
-of a caller-chosen partition expression (an Iceberg partition column in
-production — date bucket, url-host hash bucket — so each group's filter
-PRUNES the scan to that partition; at sandbox scale any low-cardinality
-column expression works).
+in-process. Here the checkpoint is DURABLE: a verdict store keyed by
+(suite_fingerprint, group_id), where ``group_id`` is the value of a
+caller-chosen partition expression (an Iceberg partition column in
+production — date bucket, url-host hash bucket; at small scale any
+low-cardinality column expression works).
 
-Resume = set-difference of group ids against completed checkpoints
-(driver-side: group lists are small by construction), then validate only
-pending groups. Each group's summary appends atomically (one parquet
-file per group under its own subdirectory) BEFORE the group is marked
-complete, so a crash mid-group re-runs just that group.
+One run is ONE grouped pass. Rows are tagged with their group id; NULL
+groups are dropped, and so are the groups the store has completed, by
+an anti-filter ``~isin(done)`` on the group column — on a partition
+column Spark prunes the done partitions from the scan, which the
+incremental path (``versioning.revalidate_targets``) relies on. Every
+pending group's rule summary then comes from one ``summary_df(...,
+by="__group")`` aggregate over that one scan, collected once. The Spark driver
+splits the rows by group and, in sorted group order, saves each group
+(atomic marker rename) and then calls ``on_group_done`` for it. Done
+groups are loaded from the store (``resumed=True``) without evaluating
+their rules again; when the store holds any, one small distinct job
+finds which of them the data still has, so a stored group that is gone
+from the data is not returned.
+
+Crash semantics: a crash during the pass loses the pass — the next run
+re-runs every group it had pending. A crash after the pass (in a save
+or an ``on_group_done`` callback) keeps the groups saved before it, and
+those resume. ``elapsed_sec`` of a computed group is the wall time of
+the whole shared pass, not an even share of it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -29,12 +43,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from sparkcheck.compile import summary_df
 from sparkcheck.rules.models import Rule, RuleSet
+from sparkcheck.session import job_description
 
 
 @dataclass
 class GroupResult:
     group_id: str
     outcomes: list[dict[str, Any]]
+    # wall time of the pass that computed this group — one grouped pass
+    # serves every pending group, so they all carry the same figure
     elapsed_sec: float
     resumed: bool = False  # True when loaded from checkpoint, not recomputed
 
@@ -48,7 +65,14 @@ class CheckpointStore:
         os.makedirs(root, exist_ok=True)
 
     def _group_dir(self, suite_fp: str, group_id: str) -> str:
-        safe = "".join(c if c.isalnum() or c in "-_." else "_" for c in str(group_id))
+        """One directory per group id, injectively: an id that sanitising
+        changes (or that names no directory of its own: '', '.', '..')
+        gets a '~' + hash suffix, and '~' never survives sanitising, so
+        no suffixed name equals an id kept as is."""
+        raw = str(group_id)
+        safe = "".join(c if c.isalnum() or c in "-_." else "_" for c in raw)
+        if safe != raw or safe in ("", ".", ".."):
+            safe += "~" + hashlib.sha256(raw.encode()).hexdigest()[:16]
         return os.path.join(self.root, suite_fp, safe)
 
     def completed_groups(self, suite_fp: str) -> set[str]:
@@ -98,39 +122,41 @@ def checkpointed_validate(
     suite_name: str = "suite",
     on_group_done: Callable[[GroupResult], None] | None = None,
 ) -> list[GroupResult]:
-    """Validate per partition-group with resume.
+    """Validate per partition-group with resume, sorted by group id.
 
     ``group_col``: expression labeling each group (in production a
-    PARTITION column so each group filter prunes the scan). Distinct
-    group ids are collected (bounded — partitions, not rows); completed
-    groups are skipped and loaded from the store.
-    """
+    PARTITION column so the done-group anti-filter prunes the scan).
+    Every pending group is computed by one grouped pass (see the module
+    docstring); completed groups are loaded from the store."""
     suite_fp = RuleSet(name=suite_name, rules=tuple(rules)).fingerprint()
-    tagged = df.withColumn("__group", group_col.cast("string"))
-    groups = sorted(
-        r["__group"] for r in tagged.select("__group").distinct().collect()
-        if r["__group"] is not None
-    )
-    done = store.completed_groups(suite_fp)
-
+    tagged = (df.withColumn("__group", group_col.cast("string"))
+              .where(F.col("__group").isNotNull()))
+    done = sorted(store.completed_groups(suite_fp))
     results: list[GroupResult] = []
-    for g in groups:
-        if g in done:
-            results.append(store.load_group(suite_fp, g))
-            continue
+    pending = tagged
+    if done:
+        with job_description(spark, f"{suite_name}: locate {len(done)} done groups"):
+            present = (tagged.where(F.col("__group").isin(done))
+                       .select("__group").distinct().collect())
+        results = [store.load_group(suite_fp, r["__group"]) for r in present]
+        pending = tagged.where(~F.col("__group").isin(done))
+
+    with job_description(spark, f"{suite_name}: {len(rules)} rules over "
+                                f"pending groups ({len(done)} done)"):
         t0 = time.monotonic()
-        part = tagged.where(F.col("__group") == g).drop("__group")
-        rows = summary_df(part, rules).collect()
-        res = GroupResult(
-            group_id=g,
-            outcomes=[r.asDict() for r in rows],
-            elapsed_sec=time.monotonic() - t0,
-        )
+        rows = summary_df(pending, rules, by="__group").collect()
+        elapsed = time.monotonic() - t0
+    by_group: dict[str, list[dict[str, Any]]] = {}
+    for row in rows:  # stack() emits a group's rules contiguously, in order
+        o = row.asDict()
+        by_group.setdefault(o.pop("__group"), []).append(o)
+    for g in sorted(by_group):
+        res = GroupResult(group_id=g, outcomes=by_group[g], elapsed_sec=elapsed)
         store.save_group(suite_fp, res)
         if on_group_done:
             on_group_done(res)
         results.append(res)
-    return results
+    return sorted(results, key=lambda r: r.group_id)
 
 
 def merge_group_outcomes(results: Sequence[GroupResult]) -> list[dict[str, Any]]:

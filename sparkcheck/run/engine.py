@@ -56,6 +56,7 @@ from sparkcheck.rules.models import (
     UniqueRule,
 )
 from sparkcheck.run.scheduler import topo_sort
+from sparkcheck.session import job_description
 
 
 @dataclass
@@ -329,15 +330,10 @@ class ValidationEngine:
         n_rules = sum(len(rules) for _, _, rules in groups)
         suites = ", ".join(dict.fromkeys(run.ruleset.name for run, _, _ in groups))
         n_tables = len({t for _, t, _ in groups})
-        sc = self.spark.sparkContext
-        prev = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(f"{suites}: {n_rules} rules over {n_tables} tables")
-        t0 = time.monotonic()
-        try:
+        with job_description(self.spark, f"{suites}: {n_rules} rules over {n_tables} tables"):
+            t0 = time.monotonic()
             rows = union.collect()
-        finally:
-            sc.setJobDescription(prev)  # type: ignore[arg-type]
-        dt = time.monotonic() - t0
+            dt = time.monotonic() - t0
         got = {(row["grp"], row["rule_id"]): row for row in rows}
         for g, (run, table, rules) in enumerate(groups):
             plan = self._plan(frames[g])

@@ -9,7 +9,8 @@ session timezone so results compare bit-for-bit against external oracles.
 from __future__ import annotations
 
 import os
-from typing import Mapping
+from contextlib import contextmanager
+from typing import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -93,3 +94,18 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str) -> Iterator[None]:
+    """Name the Spark jobs this thread submits inside the block (what the
+    event log and UI show), restoring the previous description on exit.
+    Leaves the job group alone: callers may own it for cancellation or
+    job accounting."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)  # type: ignore[arg-type]

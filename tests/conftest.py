@@ -27,3 +27,19 @@ def _pin_session_conf(request):
     s.conf.set("spark.sql.shuffle.partitions", "4")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     yield
+
+
+@pytest.fixture
+def collects(spark, monkeypatch):
+    """The job description in force at each ``DataFrame.collect()`` the
+    test makes, in call order (``len`` counts the collects)."""
+    cls = type(spark.range(1))
+    real = cls.collect
+    seen = []
+
+    def spy(self):
+        seen.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+        return real(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    return seen

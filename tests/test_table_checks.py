@@ -198,19 +198,6 @@ def test_missing_key_columns_are_synthetic_failures(spark):
     assert by["ok"].passed and by["fine"].violations == 2
 
 
-def _count_collects(monkeypatch, spark):
-    cls = type(spark.range(1))
-    calls = []
-    real = cls.collect
-
-    def counting(self):
-        calls.append(self)
-        return real(self)
-
-    monkeypatch.setattr(cls, "collect", counting)
-    return calls
-
-
 def _three_sets(fail_fast_set=None):
     def ff(name):
         return name == fail_fast_set
@@ -227,10 +214,9 @@ def _three_sets(fail_fast_set=None):
     ]
 
 
-def test_run_rulesets_is_one_collect(spark, star, monkeypatch):
-    calls = _count_collects(monkeypatch, spark)
+def test_run_rulesets_is_one_collect(spark, star, collects):
     res = run_rulesets(spark, _three_sets(), star)
-    assert len(calls) == 1
+    assert len(collects) == 1
     assert list(res.reports) == ["cust", "ord", "ord2"]
     assert [o.rule_id for o in res.reports["ord"].outcomes] == [
         "amount_nn", "o_fk", "o_pk"]
@@ -239,25 +225,24 @@ def test_run_rulesets_is_one_collect(spark, star, monkeypatch):
                  "o_fk": 3, "amount_range": 0}
 
 
-def test_set_level_fail_fast_stages(spark, star, monkeypatch):
+def test_set_level_fail_fast_stages(spark, star, collects):
     """A fail_fast set is cut into gated stages (row pass, then each
     dependency wave); its failing row pass stops it while the other sets
     finish in the same first action."""
-    calls = _count_collects(monkeypatch, spark)
     res = run_rulesets(spark, _three_sets(fail_fast_set="ord"), star)
-    assert len(calls) == 1
+    assert len(collects) == 1
     assert [o.rule_id for o in res.reports["ord"].outcomes] == ["amount_nn"]
     assert len(res.reports["cust"].outcomes) == 2
     assert len(res.reports["ord2"].outcomes) == 1
     # a passing row pass moves on to the next stage (one more action)
-    calls.clear()
+    collects.clear()
     rs = RuleSet(name="ff", fail_fast=True, rules=(
         NullCheckRule(name="id_nn", column="o_id"),
         UniqueRule(name="o_pk", column="o_id"),
         _ri("o_fk", "orders", "c_id", "customers", "c_id"),
     ))
     rep = ValidationEngine(spark).run(rs, star, "orders")
-    assert len(calls) == 2
+    assert len(collects) == 2
     assert [o.rule_id for o in rep.outcomes] == ["id_nn", "o_fk", "o_pk"]
 
 
@@ -266,24 +251,15 @@ def test_run_level_fail_fast_skips_sets(spark, star):
     assert list(res.reports) == ["cust"] and res.skipped == ["ord", "ord2"]
 
 
-def test_fused_action_job_description(spark, star, monkeypatch):
+def test_fused_action_job_description(spark, star, collects):
     sc = spark.sparkContext
-    seen = []
-    cls = type(spark.range(1))
-    real = cls.collect
-
-    def spy(self):
-        seen.append(sc.getLocalProperty("spark.job.description"))
-        return real(self)
-
-    monkeypatch.setattr(cls, "collect", spy)
     sc.setJobDescription("outer")
     try:
         run_rulesets(spark, _three_sets(), star)
         assert sc.getLocalProperty("spark.job.description") == "outer"
     finally:
         sc.setJobDescription(None)  # type: ignore[arg-type]
-    assert seen == ["cust, ord, ord2: 6 rules over 2 tables"]
+    assert collects == ["cust, ord, ord2: 6 rules over 2 tables"]
 
 
 def test_capture_plans_fused_plan_smell_reported_once(spark):
