@@ -87,6 +87,12 @@ def get_spark(
         # Let the planner pick shuffled-hash over sort-merge when the
         # per-partition build side fits (guide §3.1) — skips both sorts.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        # Room for the generated classes a long-lived session reuses.
+        # Spark's default LRU of 100 is smaller than one pass of a
+        # validation suite plus its extraction and drift calls (~115
+        # classes), so each call recompiled its plans and ran them
+        # un-JITted again, 0.1–0.3 s slower than a repeat.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -1,13 +1,13 @@
 from sparkcheck.textextract.extract import (
     EXTRACTOR_VERSION,
+    extract_text_col,
     extract_text_py,
-    extract_text_udf,
     extraction_mismatch_rows,
 )
 
 __all__ = [
     "EXTRACTOR_VERSION",
+    "extract_text_col",
     "extract_text_py",
-    "extract_text_udf",
     "extraction_mismatch_rows",
 ]

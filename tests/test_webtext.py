@@ -3,12 +3,18 @@ and the html→text byte-identity contract (FIXTURES.md §7)."""
 
 from __future__ import annotations
 
+import re
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sparkcheck.compile import summary_df
 from sparkcheck.drift import psi
 from sparkcheck.integrity import duplicate_key_counts, uniqueness_summary
-from sparkcheck.textextract import extract_text_py, extraction_mismatch_rows
+from sparkcheck.textextract import (
+    extract_text_col, extract_text_py, extraction_mismatch_rows,
+)
 from sparkcheck.webtext import PLANTED, webtext_table, webtext_rules
 
 N = 5000
@@ -100,26 +106,108 @@ def test_drifted_slice_has_psi_signal(spark):
     assert p > 0.25
 
 
-def test_vectorized_udf_matches_pure_function(spark):
-    """The batched .str path must be byte-identical to extract_text_py
-    on every shape: well-formed, truncated, no-body, unicode, None."""
-    from pyspark.sql import functions as F
-    from sparkcheck.textextract.extract import extract_text_py, extract_text_udf
+ISSPACE = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+# byte runs Python's errors="replace" and a plain CAST decode differently
+# (surrogate and overlong encodings, past U+10FFFF), or that are cut short
+BAD_UTF8 = [b"\xed\xa0\x80", b"\xc0\xaf", b"\xe0\x80\xaf", b"\xf4\x90\x80\x80",
+            b"\xe2\x82", b"\x80", b"\xff"]
+HTML_PIECES = st.one_of(
+    st.sampled_from([p.encode() for p in [
+        "<body class='a'>", "</body>", "<head>", "</head>", "<p>", "</p>",
+        "<", ">", "<b", "K", "\u017f", "\u0130", "\U0001f600", "\U00010000",
+        "word", "\x00",
+    ]]),
+    st.sampled_from(ISSPACE).map(str.encode),
+    st.sampled_from(BAD_UTF8),
+    st.text(max_size=3).map(str.encode),
+)
+SOUP = st.lists(HTML_PIECES, max_size=4).map(b"".join)
 
-    cases = [
-        b"<html><head><title>T</title></head><body><p>hello  world</p></body></html>",
-        b"<html><head><title>T</title></head><body><p>trunca",      # no </body>
-        b"no tags at all",
-        "<html><body>ümläut 中文</body></html>".encode(),
-        b"<body a=1>x<div>y</div>z</body>",
-        b"",
-        None,
+
+def _maybe(*tags):
+    return st.sampled_from([b"", *tags])
+
+
+HTML_VALUES = st.one_of(
+    st.none(),
+    st.binary(max_size=40),
+    # soup around optional head and body tags of any case, in order
+    st.tuples(SOUP, _maybe(b"<head>", b"<HeAd lang=en>"), SOUP, _maybe(b"</head>", b"</HEAD>"),
+              SOUP, _maybe(b"<body>", b"<BODY\nid=x>"), SOUP, _maybe(b"</body>", b"</BoDy>"),
+              SOUP).map(b"".join),
+)
+
+
+def _extract_col(spark, values):
+    """extract_text_col over ``values`` (bytes or None), in input order."""
+    df = spark.createDataFrame(list(enumerate(values)), "i int, html binary")
+    got = dict(df.select("i", extract_text_col(F.col("html"))).collect())
+    return [got[i] for i in range(len(values))]
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(values=st.lists(HTML_VALUES, min_size=1, max_size=40))
+@example(values=[b"<BODY>a</BoDy>b", b"<body>a</body>b</body>", b"<HEAD>t</head>x",
+                 b"<body>a\xed\xa0\x80</body>", "a\u3000b\x1c".encode()])
+@example(values=[
+    b"<html><head><title>T</title></head><body><p>hello  world</p></body></html>",
+    b"<html><head><title>T</title></head><body><p>trunca",
+    b"no tags at all", "<html><body>\u00fcml\u00e4ut \u4e2d\u6587</body></html>".encode(),
+    b"<body a=1>x<div>y</div>z</body>", b"", None,
+])
+def test_extract_text_col_matches_pure_function(spark, values):
+    """The native expression is byte-identical to extract_text_py on
+    tag soup, every str.isspace() code point, Unicode case-fold traps,
+    astral characters and invalid UTF-8."""
+    assert _extract_col(spark, values) == [extract_text_py(v) for v in values]
+
+
+def test_extract_text_col_every_code_point(spark):
+    """Every non-surrogate code point, 512 per document, inside a body."""
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    blocks = ["".join(map(chr, cps[k:k + 512])) for k in range(0, len(cps), 512)]
+    values = [f"<body>{b}</body>".encode() for b in blocks]
+    got = _extract_col(spark, values)
+    for i, (g, v) in enumerate(zip(got, values)):
+        assert g == extract_text_py(v), f"document {i} diverged"
+
+
+def test_extraction_mismatch_is_null_safe(spark):
+    """A NULL on exactly one side is a mismatch, whatever the other side
+    holds: a stored text equal to any NULL sentinel must not hide it."""
+    rows = [
+        (0, None, "\0NULL"),
+        (1, None, None),
+        (2, b"<body></body>", None),
+        (3, b"<body></body>", ""),
+        (4, b"<body> x </body>", "x"),
+        (5, b"<body>x</body>", "x "),
     ]
-    df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i int, html binary")
-    got = {r["i"]: r["t"] for r in
-           df.select("i", extract_text_udf(F.col("html")).alias("t")).collect()}
-    for i, c in enumerate(cases):
-        assert got[i] == extract_text_py(c), f"case {i} diverged"
+    df = spark.createDataFrame(rows, "id int, html binary, text string")
+    got = sorted(r["id"] for r in extraction_mismatch_rows(df, key_cols=("id",)).collect())
+    assert got == [0, 2, 5]
+
+
+def _scan_schema(frame):
+    """Field list of the first parquet scan's ReadSchema."""
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"ReadSchema: struct<([^>]*)", plan)
+    assert m, plan
+    return m.group(1)
+
+
+def test_extraction_plan_is_native_and_pruned(spark, tmp_path):
+    """The mismatch count runs in the JVM (no Python eval node) and its
+    scan reads only html, text and the key columns."""
+    path = str(tmp_path / "wt")
+    webtext_table(spark, 2000, num_partitions=2).write.parquet(path)
+    df = spark.read.parquet(path)
+    counted = extraction_mismatch_rows(df, key_cols=("doc_id",)).groupBy().count()
+    plan = counted._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    fields = {f.split(":")[0] for f in _scan_schema(counted).split(",")}
+    assert {"html", "text"} <= fields <= {"html", "text", "doc_id"}, fields
 
 
 def test_fused_suite_plan_prunes_heavy_columns(spark, tmp_path):
@@ -136,18 +224,11 @@ def test_fused_suite_plan_prunes_heavy_columns(spark, tmp_path):
         "warc_ts_epoch", F.unix_timestamp("warc_ts").cast("double"))
     rules = webtext_rules()
 
-    def scan_schema(frame):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        import re
-        m = re.search(r"ReadSchema: struct<([^>]*)", plan)
-        assert m, plan
-        return m.group(1)
-
-    agg_schema = scan_schema(fused_agg(df, rules))
+    agg_schema = _scan_schema(fused_agg(df, rules))
     assert "html" not in agg_schema, agg_schema
     assert "url" in agg_schema and "text" in agg_schema
 
-    viol_schema = scan_schema(violation_rows(df, rules, key_cols=["url"]))
+    viol_schema = _scan_schema(violation_rows(df, rules, key_cols=["url"]))
     assert "html" not in viol_schema, viol_schema
 
 
